@@ -23,6 +23,7 @@ byte-identical to a plain persist, so oracle hashes are unaffected.
 
 from __future__ import annotations
 
+import logging
 import os
 from collections.abc import Iterator
 from contextlib import contextmanager
@@ -82,9 +83,14 @@ def managed_query(
 # (OPTIMIZATION_r14.md "Not yet optimized"): after a heterogeneous
 # pandas/Arrow churn the pool grows to ~95 processes / 14 GB RSS, and
 # spark.python.worker.idleTimeoutSeconds does not reap the daemon pool.
-# On a long-lived session that is an unbounded memory leak; it also
-# inflates small-task Python stages 2-7x (worker acquisition from a
-# bloated pool).
+# On a long-lived session that is an unbounded memory leak. (The 2-7x
+# slowdown of small-task Python stages seen after such churn was blamed
+# on the pool's size; the measured cause is per task: PySpark re-reads
+# pyspark.zip's directory once per zip importer at the start of every
+# task, and a worker that imported pyspark.pandas/ml holds 27 importers
+# instead of 16. On a 4-vCPU host a 16-task no-op mapInPandas went
+# 1.35 -> 1.79 s after those imports; session.get_spark's worker
+# daemon, pyworker.py, removes the re-read: 0.48 -> 0.41 s.)
 #
 # Policy: after each managed query, measure the pool's total RSS
 # (driver-side /proc walk over the JVM's descendants — no Spark job);
@@ -174,12 +180,21 @@ def recycle_python_workers(spark: SparkSession) -> None:
 
 def maybe_recycle_python_workers(spark: SparkSession) -> bool:
     """Recycle the pool iff its RSS exceeds the ceiling; returns whether
-    it fired. Called by managed_query on scope exit."""
+    it fired. Called by managed_query on scope exit, where an exception
+    would replace the query's own, so the policy is best-effort: any
+    failure (non-procfs platform, a Spark version without the private
+    ``SparkEnv.pythonWorkers``) is logged and reported as not fired."""
     try:
         stats = python_worker_pool_stats(spark)
     except Exception:
-        return False  # non-procfs platform: policy is best-effort
+        return False
     if stats["rss_bytes"] <= POOL_CEILING_MB * 1024 * 1024:
         return False
-    recycle_python_workers(spark)
+    try:
+        recycle_python_workers(spark)
+    except Exception:
+        logging.getLogger(__name__).warning(
+            "python worker pool recycle failed", exc_info=True
+        )
+        return False
     return True

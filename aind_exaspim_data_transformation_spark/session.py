@@ -42,14 +42,24 @@ def shuffle_partitions_for_bytes(
     return max(cpus, math.ceil(input_bytes / BYTES_PER_SHUFFLE_PARTITION))
 
 
+def _prepend_worker_pythonpath(path: str) -> None:
+    """Put ``path`` on the PYTHONPATH of Python WORKER processes. It
+    must be in the env BEFORE the JVM launches: workers inherit the
+    JVM's env."""
+    current = os.environ.get("PYTHONPATH", "")
+    if path not in current.split(os.pathsep):
+        os.environ["PYTHONPATH"] = (
+            f"{path}{os.pathsep}{current}" if current else path
+        )
+
+
 def _ensure_protoshim_pythonpath() -> None:
     """When no real google.protobuf exists, expose the from-spec shim's
-    vendor package to Python WORKER processes via PYTHONPATH — it must
-    be in the env BEFORE the JVM launches (workers inherit the JVM's
-    env). A regular ``google`` package on any sys.path entry beats the
-    namespace-package portions Python otherwise assembles from Spark's
-    jars (spark-core contains a ``google/`` resource directory), which
-    is exactly the shadowing the TWS state clients trip over."""
+    vendor package to Python workers. A regular ``google`` package on
+    any sys.path entry beats the namespace-package portions Python
+    otherwise assembles from Spark's jars (spark-core contains a
+    ``google/`` resource directory), which is exactly the shadowing the
+    TWS state clients trip over."""
     try:
         import google.protobuf  # noqa: F401
 
@@ -58,12 +68,27 @@ def _ensure_protoshim_pythonpath() -> None:
         pass
     from .protoshim import vendor_path
 
-    vp = vendor_path()
-    current = os.environ.get("PYTHONPATH", "")
-    if vp not in current.split(os.pathsep):
-        os.environ["PYTHONPATH"] = (
-            f"{vp}{os.pathsep}{current}" if current else vp
-        )
+    _prepend_worker_pythonpath(vendor_path())
+
+
+# The Python worker daemon of every local session (pyworker.py:
+# pyspark.daemon minus the per-task re-read of pyspark.zip's directory,
+# measured at ~200 ms of every Python task on a 4-vCPU host). The daemon
+# is imported before any task runs, so the package root must be on the
+# workers' PYTHONPATH when the JVM starts; a site-packages install
+# already is (and site-packages must not go ahead of the stdlib). On a
+# cluster the daemon starts before --py-files reach its path, so there
+# the conf is not forced: set spark.python.daemon.module to this module
+# only where the package is installed on every executor.
+WORKER_DAEMON_MODULE = f"{__package__}.pyworker"
+
+
+def _ensure_package_pythonpath() -> None:
+    import site
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if root not in site.getsitepackages() + [site.getusersitepackages()]:
+        _prepend_worker_pythonpath(root)
 
 
 def get_spark(
@@ -75,7 +100,8 @@ def get_spark(
     """Build (or fetch) a SparkSession tuned for this engine.
 
     On a real cluster the master/deploy settings come from spark-submit;
-    everything here is master-agnostic except the local[] fallback.
+    everything here is master-agnostic except the local[] fallback and
+    its worker daemon (:data:`WORKER_DAEMON_MODULE`).
 
     ``target_input_bytes`` (opt-in): size the INITIAL shuffle-partition
     count from the input the job will scan, via
@@ -116,7 +142,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     if not os.environ.get("SPARK_GRAFT_ON_CLUSTER"):
-        builder = builder.master(f"local[{cpus}]")
+        _ensure_package_pythonpath()
+        builder = builder.master(f"local[{cpus}]").config(
+            "spark.python.daemon.module", WORKER_DAEMON_MODULE
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

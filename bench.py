@@ -562,7 +562,7 @@ def main() -> None:
             "conversion_noise_gbps but EXCLUDED from value so the"
             " headline remains comparable to earlier rounds."
             " q01_pricing_summary_x64 (r15+) is a core-scaling probe —"
-            " the q01 aggregation over lineitem fanned 16x in-plan, the"
+            " the q01 aggregation over lineitem fanned 64x in-plan, the"
             " only query row above the sf0.1 job floor — also reported"
             " in queries but EXCLUDED from value."
         ),

@@ -146,3 +146,35 @@ def test_python_worker_pool_recycle(spark):
     assert df2[0][0] == 55
     assert python_worker_pool_stats(spark)["n_processes"] >= 1
     assert POOL_CEILING_MB > 0
+
+
+def test_failing_pool_recycle_never_masks_query_error(spark, monkeypatch):
+    """managed_query's cleanup runs in a ``finally``: a pool recycle
+    that raises (e.g. a Spark release without the private
+    SparkEnv.pythonWorkers) must neither replace the query's own
+    exception nor fail a query that succeeded."""
+    from aind_exaspim_data_transformation_spark.queries import (
+        QUERIES,
+        lifecycle,
+    )
+
+    def broken_recycle(spark):
+        raise RuntimeError("pythonWorkers is gone")
+
+    monkeypatch.setattr(
+        lifecycle,
+        "python_worker_pool_stats",
+        lambda spark: {"n_processes": 1, "rss_bytes": 1 << 60},
+    )
+    monkeypatch.setattr(lifecycle, "recycle_python_workers", broken_recycle)
+    monkeypatch.setitem(QUERIES, "q_test_fails", lambda spark, sf: spark)
+
+    class QueryError(Exception):
+        pass
+
+    with pytest.raises(QueryError):
+        with lifecycle.managed_query(spark, SF_SMALL, "q_test_fails"):
+            raise QueryError
+    with lifecycle.managed_query(spark, SF_SMALL, "q_test_fails") as got:
+        assert got is spark
+    assert lifecycle.maybe_recycle_python_workers(spark) is False

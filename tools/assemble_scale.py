@@ -1,6 +1,6 @@
 """Assemble SCALE_r{N}.json from this round's sweep logs.
 
-Round-agnostic successor to ``assemble_scale_r13.py`` with the
+Round-agnostic (it replaces the per-round assemblers) and carries the
 round-13 advice hygiene fixes: explicit ``is not None`` checks (a
 legitimate 0.0 sec is no longer conflated with missing), file handles
 closed via ``with``, and malformed rows carrying ``secs: []`` but a
